@@ -2,11 +2,18 @@
 checkpoints per-partition lineage and counters so the job resumes mid-run").
 
 Design (SURVEY.md §4.2 Resume): the url space is split into K work units
-(``part_id = pmod(xxhash64(url), K)``). Each unit runs the full pipeline on
-its slice and writes ``triples/part_id=<k>/`` idempotently (overwrite), then
-appends a manifest row (rows in/out, checksum, timestamp) to ``_lineage``.
-On restart, completed part_ids are skipped — a crashed run resumes exactly
-where it stopped, and re-running a completed unit rewrites identical bytes.
+(``part_id = pmod(xxhash64(url), K)``). Each unit runs the pipeline on its
+slice once and persists its triples, so the triples sink and the edges
+derived from them share one computation. Each sink writes
+``<table>/part_id=<k>/`` idempotently (overwrite), reads it back for its
+checksum, appends a manifest row (rows in/out, checksum, timestamp) to
+``_lineage`` and commits a snapshot.
+
+A job reads the manifest once, at start (not at all for a fresh
+``out_dir``): that start state lists every stage's completed parts, which
+are skipped, so a crashed run resumes exactly where it stopped. The closing
+heal compares each snapshot with start state ∪ this job's appends. Hence
+ONE writer per ``out_dir``: another job's appends are not in that state.
 
 At 100 TB scale K is sized so one unit ≈ a few hundred GB (K ~ 10k); units
 are embarrassingly parallel across job submissions too.
@@ -20,6 +27,8 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import threading
+from collections import defaultdict
 
 import pandas as pd
 
@@ -46,14 +55,33 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
     return spark.read.parquet(path)
 
 
+def _manifest_parts(spark: SparkSession, out_dir: str) -> dict[str, set[int]]:
+    """{stage: completed part ids} from one manifest read (no Spark job
+    when ``out_dir`` has no manifest yet)."""
+    m = read_manifest(spark, out_dir)
+    parts: dict[str, set[int]] = defaultdict(set)
+    rows = m.select("stage", "part_id").distinct().collect() if m is not None else []
+    for r in rows:
+        parts[r.stage].add(r.part_id)
+    return parts
+
+
 def completed_parts(spark: SparkSession, out_dir: str, stage: str) -> set[int]:
+    return _manifest_parts(spark, out_dir)[stage]
+
+
+def _latest_manifest_rows(spark: SparkSession, out_dir: str, table: str) -> list:
+    """(part_id, rows_out, checksum) of each part's latest manifest row."""
     m = read_manifest(spark, out_dir)
     if m is None:
-        return set()
-    return {
-        r.part_id
-        for r in m.filter(F.col("stage") == stage).select("part_id").distinct().collect()
-    }
+        return []
+    return (
+        m.filter(F.col("stage") == table)
+        .groupBy("part_id")
+        .agg(F.max(F.struct("completed_at", "rows_out", "checksum")).alias("last"))
+        .select("part_id", "last.rows_out", "last.checksum")
+        .collect()
+    )
 
 
 def append_manifest(spark: SparkSession, out_dir: str, row: dict) -> None:
@@ -68,7 +96,7 @@ def table_checksum(df: DataFrame) -> tuple[int, str]:
     units cannot silently drift in confidence/weight/score (ADVICE r1).
     Same recipe as the historical triples checksum (schema column order,
     e6 conf stabilization) — but note it hashes EVERY column of the frame
-    it is given: commit_sink feeds it the written part read back, which
+    it is given: the unit commit feeds it the written part read back, which
     carries the part_id column, so checksums recorded by round-3 code are
     not comparable to manifests written before the multi-sink change."""
     from pyspark.sql.types import DoubleType, FloatType
@@ -86,8 +114,130 @@ def table_checksum(df: DataFrame) -> tuple[int, str]:
     return int(h["n"]), format((int(h["s"] or 0)) & 0xFFFFFFFFFFFFFFFF, "016x")
 
 
-# historical name (round-1/2 surface); triples was the only sink then
-triples_checksum = table_checksum
+class _Writer:
+    """One job, the sole writer of ``out_dir``: its start state (completed
+    parts per stage, one manifest read), shared dictionary state, the rows
+    it appended and the lock serializing its manifest + snapshot commits.
+    Refuses an ``out_dir`` whose committed snapshots it cannot extend."""
+
+    def __init__(self, spark: SparkSession, out_dir: str, alias_pdf: pd.DataFrame,
+                 n_parts: int | None, weights_map: dict | None, retain: int | None):
+        from .pipeline import build_dictionary_state
+
+        # fail-loud on a unit-count change: part_id = pmod(xxhash64(url), K),
+        # so under a different K "completed" parts would silently cover the
+        # WRONG url slices. EVERY table with a committed snapshot is checked:
+        # an out_dir written with sinks=("edges",) carries its unit
+        # assignment in metadata/edges/ only (ADVICE r3)
+        for t in snapshot_tables(out_dir):
+            snap = current_snapshot(out_dir, table=t)
+            if snap is None:
+                continue
+            if snap.get("n_parts") not in (None, n_parts):
+                raise ValueError(
+                    f"{out_dir} ({t}) was written with n_parts="
+                    f"{snap['n_parts']}; resuming with n_parts={n_parts} "
+                    "would remap the url→unit assignment under the committed "
+                    "parts. Re-run with the original n_parts, or start a fresh "
+                    "output directory."
+                )
+            if snap.get("checksum_ver") != CHECKSUM_VER:
+                raise ValueError(
+                    f"{out_dir} ({t}) was written under checksum recipe "
+                    f"v{snap.get('checksum_ver')} (pre-multi-sink); this "
+                    f"code records v{CHECKSUM_VER} checksums, so resumed parts "
+                    "could not be integrity-compared against the committed "
+                    "manifest. Start a fresh output directory (or re-run the "
+                    "whole job into it)."
+                )
+        self.spark, self.out_dir, self.alias_pdf = spark, out_dir, alias_pdf
+        self.n_parts, self.weights_map, self.retain = n_parts, weights_map, retain
+        self.start = _manifest_parts(spark, out_dir)
+        self.dict_state = build_dictionary_state(spark, alias_pdf)  # unit-invariant
+        self.written: list[dict] = []
+        self._lock = threading.Lock()
+
+    def todo(self, table: str, pid: int) -> bool:
+        return pid not in self.start[table]
+
+    def commit(self, table: str, pid: int, df: DataFrame, rows_in: int) -> None:
+        part_path = os.path.join(self.out_dir, table, f"part_id={pid}")
+        df.withColumn("part_id", F.lit(pid)).write.mode("overwrite").parquet(part_path)
+        back = self.spark.read.parquet(part_path)
+        n, checksum = table_checksum(back)
+        row = {"stage": table, "part_id": pid, "rows_in": rows_in, "rows_out": n,
+               "checksum": checksum,
+               "completed_at": dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)}
+        with self._lock:
+            append_manifest(self.spark, self.out_dir, row)
+            write_snapshot(self.spark, self.out_dir, self.n_parts, table=table,
+                           schema_json=back.schema.json(),
+                           add_part={"part_id": pid, "rows": n,
+                                     "checksum": checksum},
+                           retain=self.retain)
+            self.written.append(row)
+
+    def run_unit(self, pid: int, slice_df: DataFrame, tables: list[str]) -> None:
+        """One pipeline run over the unit's slice; commits each of ``tables``
+        the start state lacks for ``pid``."""
+        from pyspark import StorageLevel
+
+        from .pipeline import edges_from_triples, run_pipeline
+
+        obs = Observation(f"pages_in_{pid}")
+        slice_df = slice_df.observe(obs, F.count(F.lit(1)).alias("rows_in"))
+        out = run_pipeline(self.spark, slice_df, self.alias_pdf,
+                           dict_state=self.dict_state, weights_map=self.weights_map)
+        # the edges sink aggregates the triples the triples sink writes:
+        # persisting them runs extract_triples once per unit, not per sink
+        triples = out["triples"].persist(StorageLevel.MEMORY_AND_DISK)
+        frames = {"triples": triples, "edges": edges_from_triples(triples),
+                  "mentions": out["mentions"]}
+        try:
+            for table in tables:
+                # after a crash between a unit's sink commits, only the
+                # missing siblings commit: re-committing a manifested one
+                # would append duplicate manifest/snapshot rows
+                if self.todo(table, pid):
+                    self.commit(table, pid, frames[table], int(obs.get["rows_in"]))
+        finally:
+            # K~10k units would otherwise pile up cached blocks for the
+            # whole session (ADVICE r1)
+            out["mentions"].unpersist()
+            triples.unpersist()
+
+    def run_units(self, units: list[tuple[int, DataFrame]], tables: list[str],
+                  max_inflight: int, fail_after: int | None) -> None:
+        """Run (pid, slice) ``units`` serially or ``max_inflight`` at once
+        (driver threads). ``fail_after`` forces the serial path, the only
+        one where it is well-defined."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        if max_inflight <= 1 or fail_after is not None:
+            for i, (pid, slice_df) in enumerate(units):
+                if fail_after is not None and i >= fail_after:
+                    raise RuntimeError(f"injected failure before part {pid}")
+                self.run_unit(pid, slice_df, tables)
+        else:
+            with ThreadPoolExecutor(max_workers=max_inflight) as pool:
+                # list() re-raises the first failure
+                list(pool.map(lambda u: self.run_unit(*u, tables), units))
+
+    def heal(self, tables: tuple[str, ...]) -> None:
+        """Converge each snapshot to the manifest (start state ∪ this
+        job's appends): a crash between append_manifest and write_snapshot
+        leaves the pointer behind, and readers would silently drop the
+        committed part."""
+        for table in tables:
+            done = self.start[table] | {
+                r["part_id"] for r in self.written if r["stage"] == table}
+            snap = current_snapshot(self.out_dir, table=table)
+            if snap is None or set(snap["completed"]) != done:
+                write_snapshot(self.spark, self.out_dir, self.n_parts,
+                               table=table, retain=self.retain)
+
+    def rows(self) -> list[dict]:
+        return sorted(self.written, key=lambda r: (r["stage"], r["part_id"]))
 
 
 def run_partitioned(
@@ -108,6 +258,11 @@ def run_partitioned(
     (sorted by (stage, part_id) — overlapped completion order is not
     semantic).
 
+    Per the module rules: triples are computed once per unit (the edges
+    sink aggregates the persisted triples), the manifest is read once per
+    job, the closing heal uses start state ∪ this job's appends, and
+    ``out_dir`` takes one writer at a time.
+
     ``max_inflight`` > 1 overlaps work units: up to that many units run as
     concurrent Spark jobs (driver threads; Spark's scheduler interleaves
     their stages), so the cluster never idles between a unit's final write
@@ -125,128 +280,32 @@ def run_partitioned(
     "entities" sink (dictionary ⋈ canonical map — identical whatever unit
     computes it) writes once as part_id=0 after the units. ``retain``
     bounds snapshot history per table (see expire_snapshots)."""
-    import threading
-    from concurrent.futures import ThreadPoolExecutor
-
-    from .pipeline import build_dictionary_state, run_pipeline
-
     per_unit = [s for s in sinks if s != "entities"]
     unknown = set(sinks) - {"triples", "edges", "mentions", "entities"}
     if unknown:
         raise ValueError(f"unknown sinks: {sorted(unknown)}")
     os.makedirs(out_dir, exist_ok=True)
-    # fail-loud on a unit-count change: part_id = pmod(xxhash64(url), K), so
-    # resuming an output produced under a different K would assign every url
-    # to a different unit — "completed" parts would silently cover the WRONG
-    # url slices and re-run units would double some urls and drop others.
-    # EVERY table with a committed snapshot is checked, not just triples: an
-    # out_dir written with sinks=("edges",) carries its unit assignment in
-    # metadata/edges/ only, and the old triples-only probe silently let a
-    # different n_parts remap it (ADVICE r3)
-    for t in snapshot_tables(out_dir):
-        prev_snap = current_snapshot(out_dir, table=t)
-        if prev_snap is None:
-            continue
-        if prev_snap.get("n_parts") not in (None, n_parts):
-            raise ValueError(
-                f"{out_dir} ({t}) was written with n_parts="
-                f"{prev_snap['n_parts']}; resuming with n_parts={n_parts} "
-                "would remap the url→unit assignment under the committed "
-                "parts. Re-run with the original n_parts, or start a fresh "
-                "output directory."
-            )
-        if prev_snap.get("checksum_ver") != CHECKSUM_VER:
-            raise ValueError(
-                f"{out_dir} ({t}) was written under checksum recipe "
-                f"v{prev_snap.get('checksum_ver')} (pre-multi-sink); this "
-                f"code records v{CHECKSUM_VER} checksums, so resumed parts "
-                "could not be integrity-compared against the committed "
-                "manifest. Start a fresh output directory (or re-run the "
-                "whole job into it)."
-            )
-    done = {s: completed_parts(spark, out_dir, s) for s in sinks}
+    w = _Writer(spark, out_dir, alias_pdf, n_parts, weights_map, retain)
     staged = pages.withColumn(
         "part_id", F.pmod(F.xxhash64("url"), F.lit(n_parts)).cast("int")
     )
-    dict_state = build_dictionary_state(spark, alias_pdf)  # unit-invariant
-    commit_lock = threading.Lock()
-    written: list[dict] = []
-
-    def commit_sink(table: str, pid: int, df: DataFrame, rows_in: int) -> dict:
-        part_path = os.path.join(out_dir, table, f"part_id={pid}")
-        df.withColumn("part_id", F.lit(pid)).write.mode("overwrite").parquet(part_path)
-        written_df = spark.read.parquet(part_path)
-        n, checksum = table_checksum(written_df)
-        row = {
-            "stage": table,
-            "part_id": pid,
-            "rows_in": rows_in,
-            "rows_out": n,
-            "checksum": checksum,
-            "completed_at": dt.datetime.now(dt.timezone.utc).replace(tzinfo=None),
-        }
-        with commit_lock:
-            append_manifest(spark, out_dir, row)
-            write_snapshot(spark, out_dir, n_parts, table=table,
-                           schema_json=written_df.schema.json(),
-                           add_part={"part_id": pid, "rows": n,
-                                     "checksum": checksum},
-                           retain=retain)
-            written.append(row)
-        return row
-
-    def run_unit(pid: int) -> None:
-        slice_df = staged.filter(F.col("part_id") == pid).drop("part_id")
-        obs = Observation(f"pages_in_{pid}")
-        slice_df = slice_df.observe(obs, F.count(F.lit(1)).alias("rows_in"))
-        out = run_pipeline(spark, slice_df, alias_pdf, dict_state=dict_state,
-                           weights_map=weights_map)
-        for table in per_unit:
-            if pid in done[table]:
-                # a crash between a unit's sink commits leaves siblings
-                # behind: the pipeline recompute is unavoidable (the missing
-                # sink derives from it), but re-committing an already-
-                # manifested sink would just rewrite identical bytes and
-                # append duplicate manifest/snapshot rows
-                continue
-            commit_sink(table, pid, out[table], int(obs.get["rows_in"]))
-        # done with this unit — release the cached tagger output before the
-        # next unit persists its own (K~10k units would otherwise pile up
-        # cached blocks for the whole session; ADVICE r1)
-        out["mentions"].unpersist()
-
     pending = [
-        pid for pid in range(n_parts)
-        if any(pid not in done[s] for s in per_unit)
+        (pid, staged.filter(F.col("part_id") == pid).drop("part_id"))
+        for pid in range(n_parts)
+        if any(w.todo(s, pid) for s in per_unit)
     ]
     if max_inflight is None:
         max_inflight = 1 if len(pending) < 3 else min(4, len(pending))
-    if max_inflight <= 1 or fail_after is not None:
-        # serial path (and the only one where fail_after is well-defined)
-        for i, pid in enumerate(pending):
-            if fail_after is not None and i >= fail_after:
-                raise RuntimeError(f"injected failure before part {pid}")
-            run_unit(pid)
-    else:
-        with ThreadPoolExecutor(max_workers=max_inflight) as pool:
-            list(pool.map(run_unit, pending))  # re-raises the first failure
-    if "entities" in sinks and 0 not in done["entities"]:
+    w.run_units(pending, per_unit, max_inflight, fail_after)
+    if "entities" in sinks and w.todo("entities", 0):
         # unit-invariant dimension: dict_state's canonical map ⋈ alias names
         from .pipeline import entities_table
 
-        commit_sink("entities", 0,
-                    entities_table(spark, alias_pdf, dict_state["canon"]),
-                    rows_in=len(alias_pdf))
-    # heal a stale/missing snapshot pointer: a crash in the window between
-    # append_manifest and write_snapshot leaves the manifest ahead of the
-    # snapshot — readers resolving the pointer would silently drop the
-    # committed part. The manifest is the source of truth; converge to it.
-    for table in sinks:
-        snap = current_snapshot(out_dir, table=table)
-        manifest_done = completed_parts(spark, out_dir, table)
-        if snap is None or set(snap["completed"]) != manifest_done:
-            write_snapshot(spark, out_dir, n_parts, table=table, retain=retain)
-    return sorted(written, key=lambda r: (r["stage"], r["part_id"]))
+        w.commit("entities", 0,
+                 entities_table(spark, alias_pdf, w.dict_state["canon"]),
+                 rows_in=len(alias_pdf))
+    w.heal(sinks)
+    return w.rows()
 
 
 # ---------------------------------------------------------------------------
@@ -264,18 +323,12 @@ def snapshot_tables(out_dir: str) -> list[str]:
     ``metadata/`` location is the triples table; each ``metadata/<name>/``
     subdirectory with a ``current`` pointer is another sink."""
     meta = os.path.join(out_dir, "metadata")
-    out = []
-    if os.path.exists(os.path.join(meta, "current")):
-        out.append("triples")
-    if os.path.isdir(meta):
-        for d in sorted(os.listdir(meta)):
-            if os.path.exists(os.path.join(meta, d, "current")):
-                out.append(d)
-    umeta = os.path.join(out_dir, "_snapshots")  # root-layout tables (stream)
-    if os.path.isdir(umeta):
-        for d in sorted(os.listdir(umeta)):
-            if os.path.exists(os.path.join(umeta, d, "current")):
-                out.append(d)
+    out = ["triples"] if os.path.exists(os.path.join(meta, "current")) else []
+    # _snapshots/ holds the root-layout tables (stream)
+    for root in (meta, os.path.join(out_dir, "_snapshots")):
+        if os.path.isdir(root):
+            out += [d for d in sorted(os.listdir(root))
+                    if os.path.exists(os.path.join(root, d, "current"))]
     return out
 
 
@@ -338,12 +391,8 @@ def write_snapshot(spark: SparkSession, out_dir: str, n_parts: int | None,
     # writing snapshot-N.json and flipping `current` (pointer still N-1),
     # pointer+1 would silently REWRITE snapshot-N.json — snapshots are
     # immutable history (time-travel readers may pin N)
-    existing = [
-        int(f[len("snapshot-"):-len(".json")])
-        for f in os.listdir(meta)
-        if f.startswith("snapshot-") and f.endswith(".json")
-    ]
-    n = (max(existing) + 1) if existing else 0
+    existing = _snapshot_ids(meta)
+    n = (existing[-1] + 1) if existing else 0
     if add_part is not None:
         base = prev["manifest"] if prev else []
         parts = sorted(
@@ -351,21 +400,11 @@ def write_snapshot(spark: SparkSession, out_dir: str, n_parts: int | None,
             key=lambda p: p["part_id"],
         )
     else:
-        m = read_manifest(spark, out_dir)
-        parts = []
-        if m is not None:
-            rows = (
-                m.filter(F.col("stage") == table)
-                .groupBy("part_id")
-                .agg(F.max(F.struct("completed_at", "rows_out", "checksum")).alias("last"))
-                .select("part_id", "last.rows_out", "last.checksum")
-                .collect()
-            )
-            parts = sorted(
-                ({"part_id": int(r.part_id), "rows": int(r.rows_out), "checksum": r.checksum}
-                 for r in rows),
-                key=lambda p: p["part_id"],
-            )
+        parts = sorted(
+            ({"part_id": int(r.part_id), "rows": int(r.rows_out), "checksum": r.checksum}
+             for r in _latest_manifest_rows(spark, out_dir, table)),
+            key=lambda p: p["part_id"],
+        )
     if schema_json is None and prev is not None:
         schema_json = prev.get("schema_json")
     snap = {
@@ -414,16 +453,11 @@ def expire_snapshots(out_dir: str, table: str = "triples",
     meta = _snapshot_dir(out_dir, table)
     if not os.path.isdir(meta):
         return []
-    ids = sorted(
-        int(f[len("snapshot-"):-len(".json")])
-        for f in os.listdir(meta)
-        if f.startswith("snapshot-") and f.endswith(".json")
-    )
+    ids = _snapshot_ids(meta)
     keep = set(ids[-max(keep_last, 1):])
     ptr = os.path.join(meta, "current")
     if os.path.exists(ptr):
-        with open(ptr) as f:
-            keep.add(int(f.read().strip()))
+        keep.add(_read_record(ptr, int))
     expired = [i for i in ids if i not in keep]
     for i in expired:
         os.remove(os.path.join(meta, f"snapshot-{i}.json"))
@@ -507,21 +541,41 @@ def compact_table(spark: SparkSession, out_dir: str, table: str = "triples",
     return stats
 
 
+def _read_record(path: str, parse):
+    """``parse`` (int for a `current` pointer, json.loads for a snapshot
+    file) of a commit-record file; a truncated or unparsable one raises a
+    ValueError naming it."""
+    with open(path) as f:
+        text = f.read()
+    try:
+        return parse(text)
+    except ValueError as e:  # json.JSONDecodeError is a ValueError
+        raise ValueError(f"damaged commit record {path}: {e}") from e
+
+
+def _snapshot_ids(meta: str) -> list[int]:
+    return sorted(
+        int(f[len("snapshot-"):-len(".json")])
+        for f in os.listdir(meta)
+        if f.startswith("snapshot-") and f.endswith(".json")
+    )
+
+
 def current_snapshot(out_dir: str, snapshot_id: int | None = None,
                      table: str = "triples") -> dict | None:
-    """Resolve the `current` pointer (or a pinned id — time travel)."""
+    """Resolve the `current` pointer (or a pinned id — time travel). A
+    truncated or unparsable pointer or snapshot file raises ValueError
+    naming the file."""
     meta = _snapshot_dir(out_dir, table)
     ptr = os.path.join(meta, "current")
     if snapshot_id is None:
         if not os.path.exists(ptr):
             return None
-        with open(ptr) as f:
-            snapshot_id = int(f.read().strip())
+        snapshot_id = _read_record(ptr, int)
     path = os.path.join(meta, f"snapshot-{snapshot_id}.json")
     if not os.path.exists(path):
         return None
-    with open(path) as f:
-        return json.load(f)
+    return _read_record(path, json.loads)
 
 
 def read_table(spark: SparkSession, out_dir: str, table: str,
@@ -609,26 +663,15 @@ def gc_orphan_parts(spark: SparkSession, out_dir: str,
     if not os.path.isdir(meta):
         return []
     live: set[int] = set()
-    for f in os.listdir(meta):
-        if not (f.startswith("snapshot-") and f.endswith(".json")):
-            continue
-        with open(os.path.join(meta, f)) as fh:
-            snap = json.load(fh)
+    for i in _snapshot_ids(meta):
+        snap = _read_record(os.path.join(meta, f"snapshot-{i}.json"), json.loads)
         if snap.get("manifest"):
             live |= {p["part_id"] for p in snap["manifest"]
                      if p.get("rows", 1) > 0}
         else:
             live |= set(snap.get("completed", []))
-    m = read_manifest(spark, out_dir)
-    if m is not None:
-        rows = (
-            m.filter(F.col("stage") == table)
-            .groupBy("part_id")
-            .agg(F.max(F.struct("completed_at", "rows_out")).alias("last"))
-            .select("part_id", "last.rows_out")
-            .collect()
-        )
-        live |= {int(r.part_id) for r in rows if int(r.rows_out) > 0}
+    live |= {int(r.part_id) for r in _latest_manifest_rows(spark, out_dir, table)
+             if int(r.rows_out) > 0}
     base, prefix = _table_base(out_dir, table)
     if not os.path.isdir(base):
         return []
@@ -691,12 +734,9 @@ def ingest_pages(
 
     Sinks follow what the out_dir already materializes (triples and, when
     present, edges/mentions); the unit-invariant entities dimension is
-    dictionary-side and unchanged by a corpus delta. Returns the manifest
-    rows written."""
-    import threading
-
-    from .pipeline import build_dictionary_state, run_pipeline
-
+    dictionary-side and unchanged by a corpus delta. Units commit through
+    the same per-unit path as run_partitioned (one pipeline run, one
+    manifest read per call), serially. Returns the manifest rows written."""
     if not (0 <= ingest_id <= INGEST_MAX_ID) or not (
             1 <= n_units <= INGEST_PID_STRIDE):
         raise ValueError(
@@ -709,58 +749,16 @@ def ingest_pages(
         raise ValueError(
             f"{out_dir} has no batch sinks to ingest into (found "
             f"{snapshot_tables(out_dir)}); run run_partitioned first")
-    snaps = {t: current_snapshot(out_dir, table=t) for t in present}
-    n_parts_orig = next(
-        (s.get("n_parts") for s in snaps.values() if s is not None), None)
-    for t, s in snaps.items():
-        if s is not None and s.get("checksum_ver") != CHECKSUM_VER:
-            raise ValueError(
-                f"{out_dir} ({t}) carries checksum recipe "
-                f"v{s.get('checksum_ver')}; cannot append comparable parts")
-    done = {t: completed_parts(spark, out_dir, t) for t in present}
+    snaps = [current_snapshot(out_dir, table=t) for t in present]
+    n_parts_orig = next((s.get("n_parts") for s in snaps if s is not None), None)
+    w = _Writer(spark, out_dir, alias_pdf, n_parts_orig, weights_map, retain)
     base_pid = INGEST_PID_BASE + ingest_id * INGEST_PID_STRIDE
     staged = pages.withColumn(
         "unit", F.pmod(F.xxhash64("url"), F.lit(n_units)).cast("int"))
-    dict_state = build_dictionary_state(spark, alias_pdf)
-    lock = threading.Lock()
-    written: list[dict] = []
-
-    def commit(table: str, pid: int, df: DataFrame, rows_in: int) -> None:
-        part_path = os.path.join(out_dir, table, f"part_id={pid}")
-        df.withColumn("part_id", F.lit(pid)).write.mode(
-            "overwrite").parquet(part_path)
-        back = spark.read.parquet(part_path)
-        n, checksum = table_checksum(back)
-        row = {
-            "stage": table, "part_id": pid, "rows_in": rows_in,
-            "rows_out": n, "checksum": checksum,
-            "completed_at": dt.datetime.now(dt.timezone.utc).replace(
-                tzinfo=None),
-        }
-        with lock:
-            append_manifest(spark, out_dir, row)
-            write_snapshot(spark, out_dir, n_parts_orig, table=table,
-                           schema_json=back.schema.json(),
-                           add_part={"part_id": pid, "rows": n,
-                                     "checksum": checksum},
-                           retain=retain)
-            written.append(row)
-
     pending = [
-        u for u in range(n_units)
-        if any(base_pid + u not in done[t] for t in present)
+        (base_pid + u, staged.filter(F.col("unit") == u).drop("unit"))
+        for u in range(n_units)
+        if any(w.todo(t, base_pid + u) for t in present)
     ]
-    for i, u in enumerate(pending):
-        if fail_after is not None and i >= fail_after:
-            raise RuntimeError(f"injected failure before ingest unit {u}")
-        slice_df = staged.filter(F.col("unit") == u).drop("unit")
-        obs = Observation(f"ingest_{ingest_id}_{u}")
-        slice_df = slice_df.observe(obs, F.count(F.lit(1)).alias("rows_in"))
-        out = run_pipeline(spark, slice_df, alias_pdf,
-                           dict_state=dict_state, weights_map=weights_map)
-        for t in present:
-            if base_pid + u in done[t]:
-                continue
-            commit(t, base_pid + u, out[t], int(obs.get["rows_in"]))
-        out["mentions"].unpersist()
-    return sorted(written, key=lambda r: (r["stage"], r["part_id"]))
+    w.run_units(pending, present, max_inflight=1, fail_after=fail_after)
+    return w.rows()

@@ -29,6 +29,15 @@ from pyspark.sql import SparkSession
 ARROW_BATCH_ROWS = 2048
 
 
+def driver_memory() -> str:
+    """``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM`` when set, else
+    half the host's physical memory (MemTotal), capped at 16g, so the
+    driver heap fits the host with room left for the Python workers."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    default = f"{min(total // 2, 16 << 30) >> 20}m"
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default
+
+
 def build_session(
     app_name: str = "char_ner_spark",
     master: str | None = None,
@@ -62,7 +71,7 @@ def build_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
     )

@@ -171,6 +171,52 @@ def test_resume_skips_completed_and_output_identical(spark, corpus):
         shutil.rmtree(d2, ignore_errors=True)
 
 
+#: Spark jobs of a one-unit, four-sink run_partitioned on the test corpus,
+#: as measured (48 while the edges sink recomputed the triples and every
+#: sink re-read the manifest at the end of the job)
+ONE_UNIT_JOBS_MAX = 32
+
+
+def test_job_reads_manifest_once_and_runs_bounded_spark_jobs(spark, corpus, monkeypatch):
+    """A job reads the _lineage manifest at most once, into a fresh output
+    and on a resume, and a one-unit job runs at most ONE_UNIT_JOBS_MAX Spark
+    jobs — a triples recompute for the edges sink or a per-sink manifest
+    read would exceed it."""
+    from char_ner_spark import lineage
+
+    alias, pages_pdf = corpus
+    pages = spark.createDataFrame(pages_pdf)
+    sinks = ("triples", "edges", "mentions", "entities")
+    reads = []
+    real = lineage.read_manifest
+    monkeypatch.setattr(lineage, "read_manifest",
+                        lambda *a: reads.append(a) or real(*a))
+
+    def run(out_dir, **kw):
+        reads.clear()
+        lineage.run_partitioned(spark, pages, alias, out_dir, sinks=sinks, **kw)
+        assert len(reads) <= 1
+
+    sc = spark.sparkContext
+    d1, d2 = tempfile.mkdtemp(), tempfile.mkdtemp()
+    try:
+        sc.setJobGroup("one_unit_job", "one-unit run_partitioned")
+        try:
+            run(d1, n_parts=1)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events seen
+        assert len(sc.statusTracker().getJobIdsForGroup("one_unit_job")) <= ONE_UNIT_JOBS_MAX
+        with pytest.raises(RuntimeError, match="injected"):
+            run(d2, n_parts=3, fail_after=1)
+        run(d2, n_parts=3)  # resume: units 1 and 2
+        assert lineage.current_snapshot(d2, table="edges")["completed"] == [0, 1, 2]
+    finally:
+        shutil.rmtree(d1, ignore_errors=True)
+        shutil.rmtree(d2, ignore_errors=True)
+
+
 def test_overlapped_units_identical_to_serial(spark, corpus):
     """max_inflight=3 (concurrent Spark jobs from driver threads) writes the
     same triples and per-unit checksums as the serial loop — overlap changes
@@ -501,6 +547,34 @@ def test_expire_snapshots_never_drops_pointer_target():
         assert lineage.current_snapshot(d)["snapshot_id"] == 1
         assert lineage.current_snapshot(d, snapshot_id=4) is not None
         assert lineage.current_snapshot(d, snapshot_id=0) is None
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_damaged_commit_record_names_the_file():
+    """A truncated or unparsable snapshot-N.json or `current` pointer
+    raises a ValueError naming the damaged file, not a bare int() or JSON
+    parse error."""
+    import re
+
+    from char_ner_spark import lineage
+
+    d = tempfile.mkdtemp()
+    try:
+        for pid in range(2):  # add_part commits run no Spark job
+            lineage.write_snapshot(None, d, 2, add_part={
+                "part_id": pid, "rows": 1, "checksum": "0"})
+        meta = os.path.join(d, "metadata")
+        snap = os.path.join(meta, "snapshot-1.json")
+        os.truncate(snap, os.path.getsize(snap) // 2)
+        with pytest.raises(ValueError, match=re.escape(snap)):
+            lineage.current_snapshot(d)
+        ptr = os.path.join(meta, "current")
+        for text in ("", "1}"):  # truncated, unparsable
+            with open(ptr, "w") as f:
+                f.write(text)
+            with pytest.raises(ValueError, match=re.escape(ptr)):
+                lineage.current_snapshot(d)
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
