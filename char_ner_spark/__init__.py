@@ -28,7 +28,6 @@ _EXPORTS = {
     "run_pipeline": "pipeline",
     "extract_text_df": "pipeline",
     "tag_pages": "pipeline",
-    "link_mentions": "pipeline",
     "link_pairs": "pipeline",
     "extract_triples": "pipeline",
     "connected_components": "pipeline",

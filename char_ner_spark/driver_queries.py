@@ -856,16 +856,17 @@ def _fn_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fn_kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tagger stage alone (extract_text + BiLSTM + Viterbi inside the
-    vectorized UDFs), hash-checked against the golden run's mention table —
-    scores included (e6 fixed-point; batch composition is provably
-    score-invariant, tests/test_tagger_oracle.py)."""
-    from .pipeline import extract_text_df, tag_mentions
+    """Tagger stage alone — the production fused extract+tag crossing
+    (tag_pages: extract_text + BiLSTM + Viterbi in one vectorized UDF),
+    hash-checked against the golden run's mention table — scores included
+    (e6 fixed-point; batch composition is provably score-invariant,
+    tests/test_tagger_oracle.py)."""
+    from .pipeline import tag_pages
 
     register_views(spark, sf_dir)
     alias, pages_pdf = _kg_corpus()
     pages = spark.createDataFrame(pages_pdf)
-    return tag_mentions(extract_text_df(pages)).selectExpr(
+    return tag_pages(pages).selectExpr(
         "url", "sent_idx", "begin", "end", "surface", "ner_type", "lang",
         "CAST(FLOOR(CAST(score AS DOUBLE) * 1e6 + 0.5) AS BIGINT) AS score_e6",
     )

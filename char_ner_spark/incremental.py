@@ -29,14 +29,13 @@ delta:
 
 from __future__ import annotations
 
-import datetime as dt
 import os
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import lineage
+from . import lineage, pipeline
 from .linking import normalize_surface
 
 #: copy-on-write rewrites of the streaming sink take part ids from here up
@@ -50,12 +49,6 @@ _STREAM_REWRITE_PID_BASE = 1 << 30
 #: ingest_id's deterministic range, and that ingest would then find its
 #: pid already manifested and silently skip the unit
 _BATCH_REWRITE_PID_BASE = 1 << 28
-
-#: above this many delta rows the contracted CC runs distributed (same
-#: dispatch rule as build_dictionary_state — the contracted graph is tiny
-#: relative to the dictionary, so the driver path covers even large
-#: dictionaries as long as the DELTA is broadcast-sized)
-CC_DISTRIBUTED_THRESHOLD = 1_000_000
 
 
 def _normed_pairs(alias_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -72,7 +65,6 @@ def incremental_canon(
     old_canon: DataFrame,
     old_alias_pdf: pd.DataFrame,
     new_alias_pdf: pd.DataFrame,
-    cc_distributed_threshold: int = CC_DISTRIBUTED_THRESHOLD,
 ) -> tuple[DataFrame, DataFrame]:
     """Update the canonical map for a dictionary delta.
 
@@ -100,13 +92,19 @@ def incremental_canon(
     itself. All old members of one alias group share one canonical id
     already, so ONE representative node per touched alias is sufficient —
     that is what keeps the update O(delta).
+
+    A delta past ``pipeline.CC_DISTRIBUTED_THRESHOLD`` rows runs the
+    contracted CC distributed (same dispatch rule as
+    build_dictionary_state — the contracted graph is tiny relative to the
+    dictionary, so the driver path covers even large dictionaries as long
+    as the DELTA is broadcast-sized).
     """
     if len(new_alias_pdf) == 0:
         remap = spark.createDataFrame(
             [], schema="old_canonical_id long, new_canonical_id long"
         )
         return old_canon, remap
-    if len(new_alias_pdf) <= cc_distributed_threshold:
+    if len(new_alias_pdf) <= pipeline.CC_DISTRIBUTED_THRESHOLD:
         return _incremental_canon_driver(spark, old_canon, old_alias_pdf,
                                          new_alias_pdf)
     return _incremental_canon_distributed(spark, old_canon, old_alias_pdf,
@@ -216,7 +214,7 @@ def _incremental_canon_distributed(
 ) -> tuple[DataFrame, DataFrame]:
     """Same contraction, as DataFrame ops + the iterative Spark CC — the
     path for deltas past broadcast size. Parity-tested against the driver
-    path (threshold=0 in tests forces this branch)."""
+    path (a test sets the threshold to 0 to force this branch)."""
     from .pipeline import _norm_col, connected_components
 
     old_df = spark.createDataFrame(
@@ -284,7 +282,6 @@ def update_dictionary_state(
     dict_state: dict[str, DataFrame],
     old_alias_pdf: pd.DataFrame,
     new_alias_pdf: pd.DataFrame,
-    cc_distributed_threshold: int = CC_DISTRIBUTED_THRESHOLD,
 ) -> tuple[dict[str, DataFrame], DataFrame]:
     """Dictionary-delta refresh of the unit-invariant pipeline state.
 
@@ -299,9 +296,7 @@ def update_dictionary_state(
     from .pipeline import alias_spark_tables
 
     new_canon, remap = incremental_canon(
-        spark, dict_state["canon"], old_alias_pdf, new_alias_pdf,
-        cc_distributed_threshold=cc_distributed_threshold,
-    )
+        spark, dict_state["canon"], old_alias_pdf, new_alias_pdf)
     delta_bands = alias_spark_tables(spark, new_alias_pdf)["bands"]
     # all-column dedup: identical to rebuilding the table from the union
     # dictionary (re-sent identical rows collapse; genuinely conflicting
@@ -406,34 +401,6 @@ def _prune_parts_by_stats(base: str, prefix: str, pids: list[int],
     return keep
 
 
-def _cow_commit(spark: SparkSession, out_dir: str, table: str, new_pid: int,
-                df: DataFrame, superseded: list[int]) -> None:
-    """One copy-on-write part commit: write the new part directory, record
-    it in the lineage manifest, tombstone the superseded parts (the latest
-    manifest row per part wins in the heal path, and zero-row parts never
-    reach the reader)."""
-    base, prefix = lineage._table_base(out_dir, table)
-    part_path = f"{base}/{prefix}={new_pid}"
-    if prefix == "part_id":
-        # batch sinks embed part_id as a data column (commit_sink does);
-        # the streaming layout carries batch_id only in the dir name
-        df = df.withColumn("part_id", F.lit(new_pid))
-    df.write.mode("overwrite").parquet(part_path)
-    back = spark.read.parquet(part_path)
-    n, checksum = lineage.table_checksum(back)
-    now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-    lineage.append_manifest(spark, out_dir, {
-        "stage": table, "part_id": new_pid, "rows_in": n, "rows_out": n,
-        "checksum": checksum, "completed_at": now,
-    })
-    for old_pid in superseded:
-        lineage.append_manifest(spark, out_dir, {
-            "stage": table, "part_id": old_pid, "rows_in": 0,
-            "rows_out": 0, "checksum": f"superseded-by:{new_pid}",
-            "completed_at": now + dt.timedelta(microseconds=1),
-        })
-
-
 def relink_parts(
     spark: SparkSession,
     out_dir: str,
@@ -516,12 +483,14 @@ def relink_parts(
                                 alias_pdf=alias_pdf)
             new_triples = extract_triples(
                 linked, dict_state["canon"], middles).localCheckpoint()
-            _cow_commit(spark, out_dir, "triples", next_pid, new_triples,
-                        [old_pid])
+            lineage.commit_part(spark, out_dir, "triples", next_pid,
+                                new_triples, superseded=[old_pid],
+                                snapshot=False)
             written["triples"].append((old_pid, next_pid))
             if "edges" in tables:
-                _cow_commit(spark, out_dir, "edges", next_pid,
-                            edges_from_triples(new_triples), [old_pid])
+                lineage.commit_part(spark, out_dir, "edges", next_pid,
+                                    edges_from_triples(new_triples),
+                                    superseded=[old_pid], snapshot=False)
                 written["edges"].append((old_pid, next_pid))
             next_pid += 1
         for t, w in written.items():
@@ -537,9 +506,10 @@ def relink_parts(
         if old_pids:
             epid = max(max(p["part_id"] for p in esnap["manifest"]) + 1,
                        _BATCH_REWRITE_PID_BASE)
-            _cow_commit(spark, out_dir, "entities", epid,
-                        entities_table(spark, alias_pdf,
-                                       dict_state["canon"]), old_pids)
+            lineage.commit_part(spark, out_dir, "entities", epid,
+                                entities_table(spark, alias_pdf,
+                                               dict_state["canon"]),
+                                superseded=old_pids, snapshot=False)
             n = lineage.write_snapshot(spark, out_dir, esnap.get("n_parts"),
                                        table="entities", retain=retain)
             stats["entities"] = {"rewritten": [(p, epid) for p in old_pids],
@@ -606,10 +576,6 @@ def apply_dictionary_update(
     stats: dict[str, dict] = {}
     rewritten_triples: dict[int, DataFrame] = {}
 
-    def commit_part(table: str, new_pid: int, df: DataFrame,
-                    superseded: list[int]) -> None:
-        _cow_commit(spark, out_dir, table, new_pid, df, superseded)
-
     for table in tables:
         if table not in ("triples", "stream_triples", "edges", "entities"):
             continue  # the mentions sink carries no canonical ids
@@ -635,8 +601,9 @@ def apply_dictionary_update(
             # ONE new part supersedes every old one — the dimension is
             # unit-invariant, run_partitioned writes it as a single part
             old_pids = sorted(p["part_id"] for p in manifest)
-            commit_part("entities", next_pid,
-                        entities_table(spark, alias_pdf, canon), old_pids)
+            lineage.commit_part(spark, out_dir, "entities", next_pid,
+                                entities_table(spark, alias_pdf, canon),
+                                superseded=old_pids, snapshot=False)
             written = [(p, next_pid) for p in old_pids]
         else:
             key_cols = {"triples": ("subj", "obj"),
@@ -701,7 +668,8 @@ def apply_dictionary_update(
                                                "canonical_id"))
                         .select(*part_df.columns)
                     )
-                commit_part(table, next_pid, new_df, [old_pid])
+                lineage.commit_part(spark, out_dir, table, next_pid, new_df,
+                                    superseded=[old_pid], snapshot=False)
                 written.append((old_pid, next_pid))
                 next_pid += 1
         if written:

@@ -7,7 +7,9 @@ slice once and persists its triples, so the triples sink and the edges
 derived from them share one computation. Each sink writes
 ``<table>/part_id=<k>/`` idempotently (overwrite), reads it back for its
 checksum, appends a manifest row (rows in/out, checksum, timestamp) to
-``_lineage`` and commits a snapshot.
+``_lineage`` and commits a snapshot. That protocol is :func:`commit_part`,
+the one commit path of every sink part: these units, ingested slices, the
+copy-on-write rewrites of ``incremental`` and the streaming micro-batches.
 
 A job reads the manifest once, at start (not at all for a fresh
 ``out_dir``): that start state lists every stage's completed parts, which
@@ -24,11 +26,13 @@ instead of re-scanning.
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import json
 import os
 import threading
 from collections import defaultdict
+from collections.abc import Sequence
 
 import pandas as pd
 
@@ -114,6 +118,59 @@ def table_checksum(df: DataFrame) -> tuple[int, str]:
     return int(h["n"]), format((int(h["s"] or 0)) & 0xFFFFFFFFFFFFFFFF, "016x")
 
 
+def commit_part(spark: SparkSession, out_dir: str, table: str, pid: int,
+                df: DataFrame, *, rows_in: int | None = None,
+                superseded: Sequence[int] = (), snapshot: bool = True,
+                n_parts: int | None = None, retain: int | None = None,
+                lock=contextlib.nullcontext()) -> dict:
+    """The part-commit protocol every sink writer goes through: write
+    ``df`` as part ``pid`` of ``table`` (idempotent overwrite at the
+    table's layout, see :func:`_table_base`), read it back for
+    :func:`table_checksum`, then append the part's manifest row and one
+    tombstone row per ``superseded`` part (copy-on-write: the latest
+    manifest row per part wins in the heal path, and zero-row parts never
+    reach the reader).
+
+    With ``snapshot`` the part also commits an ``add_part`` snapshot
+    (``n_parts``, ``retain``); a copy-on-write pass passes False and
+    commits one snapshot per table after all its parts, so an update is
+    atomic for time travel. ``lock`` serializes the manifest append and
+    the snapshot only — the part write, read-back and checksum run outside
+    it, so overlapped units do not serialize their writes. ``rows_in``
+    defaults to the rows written. Returns the part's manifest row."""
+    base, prefix = _table_base(out_dir, table)
+    part_path = os.path.join(base, f"{prefix}={pid}")
+    if prefix == "part_id":
+        # batch sinks carry part_id as a data column; a root-layout table
+        # (the stream) carries its partition value in the dir name only
+        df = df.withColumn("part_id", F.lit(pid))
+    df.write.mode("overwrite").parquet(part_path)
+    back = spark.read.parquet(part_path)
+    n, checksum = table_checksum(back)
+    now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+    row = {"stage": table, "part_id": pid,
+           "rows_in": n if rows_in is None else rows_in, "rows_out": n,
+           "checksum": checksum, "completed_at": now}
+    with lock:
+        append_manifest(spark, out_dir, row)
+        for old in superseded:
+            append_manifest(spark, out_dir, {
+                "stage": table, "part_id": old, "rows_in": 0, "rows_out": 0,
+                "checksum": f"superseded-by:{pid}",
+                "completed_at": now + dt.timedelta(microseconds=1)})
+        if snapshot:
+            if prefix not in back.columns:
+                # schema as a table read sees it: Spark's partition-value
+                # inference types <prefix>=N dirs as int
+                back = back.withColumn(prefix, F.lit(pid).cast("int"))
+            write_snapshot(spark, out_dir, n_parts, table=table,
+                           schema_json=back.schema.json(),
+                           add_part={"part_id": pid, "rows": n,
+                                     "checksum": checksum},
+                           retain=retain)
+    return row
+
+
 class _Writer:
     """One job, the sole writer of ``out_dir``: its start state (completed
     parts per stage, one manifest read), shared dictionary state, the rows
@@ -161,21 +218,9 @@ class _Writer:
         return pid not in self.start[table]
 
     def commit(self, table: str, pid: int, df: DataFrame, rows_in: int) -> None:
-        part_path = os.path.join(self.out_dir, table, f"part_id={pid}")
-        df.withColumn("part_id", F.lit(pid)).write.mode("overwrite").parquet(part_path)
-        back = self.spark.read.parquet(part_path)
-        n, checksum = table_checksum(back)
-        row = {"stage": table, "part_id": pid, "rows_in": rows_in, "rows_out": n,
-               "checksum": checksum,
-               "completed_at": dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)}
-        with self._lock:
-            append_manifest(self.spark, self.out_dir, row)
-            write_snapshot(self.spark, self.out_dir, self.n_parts, table=table,
-                           schema_json=back.schema.json(),
-                           add_part={"part_id": pid, "rows": n,
-                                     "checksum": checksum},
-                           retain=self.retain)
-            self.written.append(row)
+        self.written.append(commit_part(
+            self.spark, self.out_dir, table, pid, df, rows_in=rows_in,
+            n_parts=self.n_parts, retain=self.retain, lock=self._lock))
 
     def run_unit(self, pid: int, slice_df: DataFrame, tables: list[str]) -> None:
         """One pipeline run over the unit's slice; commits each of ``tables``
@@ -582,9 +627,9 @@ def read_table(spark: SparkSession, out_dir: str, table: str,
                snapshot_id: int | None = None) -> DataFrame:
     """Read any snapshotted sink via its pointer (pin ``snapshot_id`` for
     time travel); falls back to a directory glob when no snapshot exists.
-    Zero-row parts are skipped — a replayed streaming micro-batch that
-    converged to empty commits rows=0 with NO partition directory on disk
-    (the replay removed the stale one), so its path must not reach the
+    Zero-row parts are skipped — a copy-on-write tombstone's directory
+    stays on disk for older snapshots, and an empty part's directory may
+    be gone (gc_orphan_parts reclaims it), so neither path may reach the
     reader."""
     base, prefix = _table_base(out_dir, table)
     snap = current_snapshot(out_dir, snapshot_id, table=table)

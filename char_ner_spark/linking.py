@@ -127,8 +127,9 @@ class AliasIndex:
         """Vectorized probe: exact winners are dict lookups against the
         precomputed per-norm best; MinHash banding for the (minority)
         non-exact remainder runs as ONE textops.minhash_bands_batch call —
-        the Arrow hot path of best_links_broadcast. Bit-identical to the
-        historical per-surface link() (fuzzy only when no exact hit)."""
+        the Arrow hot path of pipeline.link_pairs' broadcast probe.
+        Bit-identical to the historical per-surface link() (fuzzy only
+        when no exact hit)."""
         from .textops import minhash_bands_batch
 
         norms = (

@@ -1,17 +1,17 @@
 """The KG-construction pipeline, expressed Spark-first (SURVEY.md §3.2).
 
-Plan shape (hot path, 3 shuffles):
+Plan shape (hot path, run_pipeline):
   pages parquet scan (url,html,lang pruned columns)
-   → mapInPandas extract_text                       [Arrow crossing 1]
-   → repartition(lang, salted url-hash)             [shuffle 1 — lang-pure,
-     sortWithinPartitions(length(text))              skew-defused batches]
-   → mapInPandas tag_mentions                       [Arrow crossing 2]
-   → broadcast-join alias dict (exact) +
-     MinHash-band join (fuzzy, AQE skew-handled)    [shuffle 2 on band keys]
-   → window top-1 candidate per mention
-   → window lead() per sentence → template join     [shuffle 3 on (url,sent)]
+   → repartition(seeded url-hash)                   [shuffle 1 — skew-immune]
+     sortWithinPartitions(length(html))
+   → mapInPandas fused extract_text + tag           [Arrow crossing 1]
+     (each mention row carries its successor's gap and surface)
+   → distinct raw surfaces → broadcast AliasIndex
+     probe (mapInPandas)                            [shuffle 2 — distinct]
+   → two broadcast joins: mention and successor winners
+   → broadcast template join on the gap's (pre, post, f) keys
    → broadcast-join canonical map (CC output)
-   → triples
+   → final distinct → triples                       [shuffle 3]
 
 All Python crossings are Arrow-vectorized (no per-row Python —
 BASELINE.json input_hint). The pure semantics live in textops/tagger/
@@ -68,7 +68,7 @@ def extract_text_df(pages: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# stage 2: tag_mentions (fused M1+M2+M4+M5; SURVEY §2.9)
+# stage 2: tag_pages (fused extract + M1+M2+M4+M5; SURVEY §2.9)
 # ---------------------------------------------------------------------------
 
 _MENTION_SCHEMA = T.StructType(
@@ -144,14 +144,6 @@ def _tag_pdf(pdf: pd.DataFrame,
                 out["next_gap"].append(sent[e : nxt[0]] if nxt else None)
                 out["next_surface"].append(sent[nxt[0] : nxt[1]] if nxt else None)
     return pd.DataFrame(out)
-
-
-def _tag_batches_fn(weights_map: dict[str, dict] | None = None):
-    def go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _tag_pdf(pdf, weights_map)
-
-    return go
 
 
 def _tag_pages_batches_fn(weights_map: dict[str, dict] | None = None):
@@ -256,19 +248,23 @@ def domain_histogram(pages: DataFrame, salt: int | str = "auto") -> DataFrame:
     )
 
 
-def _salted_repartition(df: DataFrame, salt: int) -> DataFrame:
+#: seed of the tag stage's url-hash repartition key
+_URL_HASH_SEED = 16
+
+
+def _salted_repartition(df: DataFrame) -> DataFrame:
     """Spread pages evenly by url hash — the unbounded salt. This defuses
     host/domain/lang skew completely (urls are unique), and the tagger UDF
     groups by lang inside each Arrow batch, so batches stay GEMM-friendly
     without lang-pure partitions. (A bounded lang×salt key set collides into
-    partitions unevenly — measured stragglers at 32 partitions.) `salt`
-    is therefore a hash SEED here, not a bucket count: per-row keys need
-    no skew factor, which the domain-skew test pins (one domain = 50% of
-    pages still yields balanced partitions). The measured-skew salt from
-    :func:`derive_salt` parameterizes the bounded-key aggs
-    (:func:`domain_histogram`) where bucket count genuinely matters."""
+    partitions unevenly — measured stragglers at 32 partitions.) The key is
+    a seeded hash, not a bucket count: per-row keys need no skew factor,
+    which the domain-skew test pins (one domain = 50% of pages still yields
+    balanced partitions). The measured-skew salt from :func:`derive_salt`
+    parameterizes the bounded-key aggs (:func:`domain_histogram`) where
+    bucket count genuinely matters."""
     n = df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    return df.repartition(int(n), F.xxhash64("url", F.lit(salt)))
+    return df.repartition(int(n), F.xxhash64("url", F.lit(_URL_HASH_SEED)))
 
 
 def _resolve_salt(df: DataFrame, salt: int | str) -> tuple[DataFrame, int]:
@@ -286,33 +282,15 @@ def _resolve_salt(df: DataFrame, salt: int | str) -> tuple[DataFrame, int]:
     return df, derived
 
 
-def tag_mentions(extracted: DataFrame, salt: int | str = 16,
-                 weights_map: dict[str, dict] | None = None) -> DataFrame:
-    """(url, text, lang) → mentions. Salted lang repartition keeps batches
-    language-homogeneous (per-lang weight dispatch, north_star) while
-    defusing host/domain/lang skew; length sort minimizes padding waste."""
-    extracted, salt = _resolve_salt(extracted.select("url", "text", "lang"), salt)
-    return (
-        _salted_repartition(extracted, salt)
-        .sortWithinPartitions(F.length("text"))
-        .mapInPandas(_tag_batches_fn(weights_map), schema=_MENTION_SCHEMA)
-    )
-
-
-def tag_pages(pages: DataFrame, salt: int | str = 16,
+def tag_pages(pages: DataFrame,
               weights_map: dict[str, dict] | None = None) -> DataFrame:
     """pages(url, html, lang) → mentions, extracting text inside the same
-    UDF (used by run_pipeline; extract_text_df stays the byte-identity
-    surface). html length is the padding-sort proxy for text length.
-    salt="auto" derives the value from measured domain skew
-    (:func:`derive_salt`) and logs the evidence through observe; the
-    default stays a fixed seed because the per-row url-hash key is
-    skew-immune (see :func:`_salted_repartition`) and the extra sampled
-    probe job is only worth paying when the caller wants the skew metrics
-    recorded."""
-    pages, salt = _resolve_salt(pages.select("url", "html", "lang"), salt)
+    UDF — one Arrow crossing for the mention path (extract_text_df stays
+    the byte-identity surface). The url-hash repartition is skew-immune
+    (see :func:`_salted_repartition`); html length is the padding-sort
+    proxy for text length."""
     return (
-        _salted_repartition(pages, salt)
+        _salted_repartition(pages.select("url", "html", "lang"))
         .sortWithinPartitions(F.length("html"))
         .mapInPandas(_tag_pages_batches_fn(weights_map), schema=_MENTION_SCHEMA)
     )
@@ -413,45 +391,17 @@ def alias_spark_tables(spark: SparkSession, alias_pdf: pd.DataFrame) -> dict[str
     return {"bands": spark.createDataFrame(bands_pdf)}
 
 
-def link_mentions(mentions: DataFrame, alias_tables: dict[str, DataFrame]) -> DataFrame:
-    """mentions → + (entity_id, link_score), nulls for unlinkable.
-
-    Scale design: candidates depend only on the normalized surface (the
-    contextual signal enters through the alias prior), and distinct surfaces
-    follow a Zipf law — orders of magnitude fewer than mentions at
-    Common-Crawl scale. So candidate generation + top-1 selection run on
-    ``DISTINCT surface_norm`` (tiny), then a single equi-join (AQE-tuned,
-    skew-salted by construction since hot surfaces are one row here) maps
-    the result back onto the mention stream. Exact matches use a broadcast
-    hash join; the rest go through the banded MinHash-LSH join."""
-    surfaces = mentions.select("surface").distinct().localCheckpoint()
-    best = best_links(surfaces, alias_tables)
-    return mentions.join(
-        F.broadcast(_raw_winner_map(surfaces, best)), "surface", "left"
-    )
-
-
-def _raw_winner_map(surfaces: DataFrame, best: DataFrame) -> DataFrame:
-    """per-NORM winners → per-RAW-surface winners, all on the tiny distinct
-    surface set; two raw surfaces sharing a normal form both pick up its
-    winner. The single definition of the linking projection (link_mentions
-    and link_pairs must not drift)."""
-    return (
-        surfaces.withColumn("surface_norm", _norm_col(F.col("surface")))
-        .join(best, "surface_norm", "inner")
-        .select("surface", "entity_id", "link_score")
-    )
-
-
 def best_links(surfaces: DataFrame, alias_tables: dict[str, DataFrame]) -> DataFrame:
-    """DISTINCT surfaces → (surface_norm, entity_id, link_score) winners.
+    """Surfaces (with their ``surface_norm``) → (surface_norm, entity_id,
+    link_score) winners through the distributed banded-LSH join — the
+    link path for a dictionary past the broadcast budget.
 
     One LSH pass covers exact matches too: equal normalized surfaces have
     identical MinHash signatures, so every exact match is a guaranteed
     band collision; the scoring UDF detects exactness (score ≥ 1.0 ≥ any
     fuzzy score, preserving the oracle's exact-first contract)."""
     bands = alias_tables["bands"]
-    norm = surfaces.select(_norm_col(F.col("surface")).alias("surface_norm")).distinct()
+    norm = surfaces.select("surface_norm").distinct()
     cands = (
         norm.select("surface_norm",
                     F.posexplode(_bands_udf("surface_norm")).alias("band_idx", "band_hash"))
@@ -530,50 +480,13 @@ def _worker_alias_index(bc, fp):
     return idx
 
 
-def best_links_broadcast(spark: SparkSession, surfaces: DataFrame,
-                         alias_pdf: pd.DataFrame) -> DataFrame:
-    """Per-surface winners via a broadcast AliasIndex probe — ONE stage.
-
-    north_rule fixes the alias dictionary as broadcastable, so candidate
-    generation + scoring + top-1 collapse into a single mapInPandas over
-    the (tiny, Zipf-deduped) distinct-surface set, probing the exact same
-    AliasIndex the oracle uses. :func:`best_links` remains the distributed
-    LSH-join path for dictionaries beyond broadcast size (tested equal)."""
-    bc, fp = _alias_broadcast(spark, alias_pdf)  # fp ships in the closure
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = _worker_alias_index(bc, fp)
-        for pdf in batches:
-            # vectorized probe: exact winners are precomputed dict lookups,
-            # MinHash banding for the non-exact remainder is one batched
-            # ndarray pass (linking.AliasIndex.link_batch)
-            sns = pdf["surface_norm"].tolist()
-            hits = idx.link_batch(sns, already_norm=True)
-            rows = {"surface_norm": [], "entity_id": [], "link_score": []}
-            for sn, hit in zip(sns, hits):
-                if hit is not None:
-                    rows["surface_norm"].append(sn)
-                    rows["entity_id"].append(hit[0])
-                    rows["link_score"].append(hit[1])
-            out = pd.DataFrame(rows)
-            out["entity_id"] = out["entity_id"].astype("int64")
-            out["link_score"] = out["link_score"].astype("float64")
-            yield out
-
-    schema = T.StructType(
-        [
-            T.StructField("surface_norm", T.StringType()),
-            T.StructField("entity_id", T.LongType()),
-            T.StructField("link_score", T.DoubleType()),
-        ]
-    )
-    norm = surfaces.select(_norm_col(F.col("surface")).alias("surface_norm")).distinct()
-    return norm.mapInPandas(gen, schema=schema)
+#: largest alias dictionary (rows) link_pairs probes as a broadcast
+#: AliasIndex; a larger one takes the distributed banded-LSH join
+BROADCAST_MAX_ROWS = 5_000_000
 
 
 def link_pairs(mentions: DataFrame, alias_tables: dict[str, DataFrame],
-               alias_pdf: pd.DataFrame | None = None,
-               broadcast_max_rows: int = 5_000_000) -> DataFrame:
+               alias_pdf: pd.DataFrame | None = None) -> DataFrame:
     """Link each mention AND its sentence-adjacent successor in one pass:
     two broadcast joins against a RAW-surface winner table — no shuffle of
     the mention stream, and (critically) no normalization of it either.
@@ -583,29 +496,29 @@ def link_pairs(mentions: DataFrame, alias_tables: dict[str, DataFrame],
     was the scaling anchor: Java-regex pointer chasing saturates shared
     cache, so it sped up only 2x from 2→8 cores while the tagger did 3.6x)
     when applied per-mention. The mention joins hash raw strings instead.
-    With ``alias_pdf`` within ``broadcast_max_rows`` (the north_rule
-    default: a broadcastable dictionary) winners come from the one-stage
-    AliasIndex probe, FUSED with the raw-surface map: one job scans the
-    mention stream once (both surface columns exploded), distincts the raw
-    surfaces, JVM-normalizes each, and probes the broadcast index inside
-    the same mapInPandas — the round-4 shape (surfaces checkpoint →
-    norm-distinct shuffle → probe → join back → second checkpoint) spent
-    ~9 serial seconds per 400k-page unit on eager jobs this fusion
-    removes, the single largest Amdahl term in the 4-vs-16-core scaling
-    fit. Winners are identical: the probe is a pure function of the
-    normal form, so probing once per RAW surface instead of once per norm
-    changes work shape, not results (path-equality tested against the
-    distributed join). A dictionary beyond the broadcast budget — or none
-    supplied — takes the distributed LSH join, which produces identical
-    winners."""
+
+    Winners come from one of two branches, picked by dictionary size:
+
+    * ``alias_pdf`` within :data:`BROADCAST_MAX_ROWS` (the north_rule
+      default: a broadcastable dictionary) — one job scans the mention
+      stream once (both surface columns exploded), distincts the raw
+      surfaces, JVM-normalizes each, and probes the broadcast AliasIndex
+      (the oracle's own index) inside one mapInPandas.
+    * a dictionary beyond the budget, or none supplied — the distributed
+      banded-LSH join (:func:`best_links`), the only path past the
+      broadcast budget.
+
+    Both branches produce identical winners
+    (test_link_pairs_broadcast_budget_fallback_identical)."""
     surfaces = (
         mentions.select(
             F.explode(F.array("surface", "next_surface")).alias("surface")
         )
         .filter(F.col("surface").isNotNull())
         .distinct()
+        .withColumn("surface_norm", _norm_col(F.col("surface")))
     )
-    if alias_pdf is not None and len(alias_pdf) <= broadcast_max_rows:
+    if alias_pdf is not None and len(alias_pdf) <= BROADCAST_MAX_ROWS:
         bc, fp = _alias_broadcast(mentions.sparkSession, alias_pdf)
 
         def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -627,21 +540,19 @@ def link_pairs(mentions: DataFrame, alias_tables: dict[str, DataFrame],
                     }
                 )
 
+        raw_map = surfaces.mapInPandas(
+            gen, schema="surface string, entity_id bigint, link_score double"
+        ).localCheckpoint()
+    else:
+        # per-NORM winners → per-RAW-surface winners on the distinct
+        # surface set: two raw surfaces sharing a normal form both pick up
+        # its winner
+        surfaces = surfaces.localCheckpoint()  # feeds the LSH join AND the raw map
         raw_map = (
-            surfaces.withColumn("surface_norm", _norm_col(F.col("surface")))
-            .mapInPandas(
-                gen,
-                schema="surface string, entity_id bigint, link_score double",
-            )
+            surfaces.join(best_links(surfaces, alias_tables), "surface_norm")
+            .select("surface", "entity_id", "link_score")
             .localCheckpoint()
         )
-    else:
-        # dictionary beyond broadcast budget (or none supplied): the
-        # distributed banded-LSH join path — identical winners by the
-        # best_links ≡ best_links_broadcast path-equality contract
-        surfaces = surfaces.localCheckpoint()  # feeds the LSH join AND the raw map
-        best = best_links(surfaces, alias_tables)
-        raw_map = _raw_winner_map(surfaces, best).localCheckpoint()
     # materialized ONCE — it feeds two broadcast joins, and broadcasting a
     # plan re-executes it per join otherwise. Lifetime: these per-call
     # localCheckpoint caches (surfaces + raw_map, both tiny distinct-surface
@@ -772,7 +683,7 @@ def canonical_map(alias_df: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# stage 5: triples via per-sentence windows (SURVEY §2.5 W2, §2.9 M8)
+# stage 5: triples via the broadcast template join (SURVEY §2.9 M8)
 # ---------------------------------------------------------------------------
 
 
@@ -930,11 +841,14 @@ def entities_table(spark: SparkSession, alias_pdf: pd.DataFrame,
 # ---------------------------------------------------------------------------
 
 
-def build_dictionary_state(
-    spark: SparkSession,
-    alias_pdf: pd.DataFrame,
-    cc_distributed_threshold: int = 1_000_000,
-) -> dict[str, DataFrame]:
+#: alias rows above which canonicalization runs the iterative Spark CC
+#: instead of driver union-find (build_dictionary_state), and delta rows
+#: above which incremental.incremental_canon does
+CC_DISTRIBUTED_THRESHOLD = 1_000_000
+
+
+def build_dictionary_state(spark: SparkSession,
+                           alias_pdf: pd.DataFrame) -> dict[str, DataFrame]:
     """Unit-invariant dictionary-side state: alias join tables + canonical
     map. Built once and shared across work units / scaling runs (the page
     stream scales with the corpus; this scales with the dictionary).
@@ -944,12 +858,12 @@ def build_dictionary_state(
     for linking) canonicalizes with driver-side union-find in milliseconds,
     while the iterative Spark CC — ~6s of fixed scheduling latency for its
     join/agg rounds regardless of data size — is reserved for dictionaries
-    past ``cc_distributed_threshold`` rows. Both paths are parity-tested
-    (test_canonical_map_matches_union_find runs them against each other)."""
+    past :data:`CC_DISTRIBUTED_THRESHOLD` rows. Both paths are parity-tested
+    (test_distributed_cc_path_matches_union_find)."""
     from .linking import union_find_canonical
 
     alias_tables = alias_spark_tables(spark, alias_pdf)
-    if len(alias_pdf) <= cc_distributed_threshold:
+    if len(alias_pdf) <= CC_DISTRIBUTED_THRESHOLD:
         canon_map = union_find_canonical(alias_pdf)
         items = sorted(canon_map.items())
         canon = spark.createDataFrame(
@@ -970,23 +884,23 @@ def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     alias_pdf: pd.DataFrame,
-    salt: int | str = 16,
     dict_state: dict[str, DataFrame] | None = None,
     weights_map: dict[str, dict] | None = None,
 ) -> dict[str, DataFrame]:
-    """Full KG pipeline. Returns DataFrames; the tagger/link stages are
-    persisted and (when dict_state is not pre-supplied) the CC stage runs
-    concurrently with the tagger materialization — both are driver-submitted
-    jobs, and local/cluster executors interleave their tasks."""
+    """Full KG pipeline. Returns DataFrames; the tag stage is persisted
+    (the link stage is two broadcast joins over it, recomputed per
+    consumer) and, when dict_state is not pre-supplied, the dictionary
+    state builds concurrently with the tagger materialization — both are
+    driver-submitted jobs, and local/cluster executors interleave their
+    tasks."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import StorageLevel
 
     extracted = extract_text_df(pages)
-    # the tagger stage feeds multiple consumers (linking join, triple window,
-    # mention sink) — persist so the BiLSTM UDF runs exactly once; same for
-    # the linked stream (triples + downstream sinks)
-    mentions = tag_pages(pages, salt=salt, weights_map=weights_map).persist(
+    # the tagger stage feeds multiple consumers (surface distinct, the two
+    # link joins, the mention sink) — persist so the BiLSTM UDF runs once
+    mentions = tag_pages(pages, weights_map=weights_map).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     if dict_state is None:

@@ -9,7 +9,7 @@ Provides:
     (mapInPandas works unchanged on streaming DataFrames) → per-window
     mention counts, exactly-once via checkpoint dir.
   - ``stream_triples``: the FULL pipeline per micro-batch (foreachBatch),
-    batch_id-partitioned parquet with dynamic-overwrite exactly-once.
+    one overwritten batch_id=N parquet part per micro-batch (exactly-once).
   - ``dedup_pages_stream`` / ``sessionize_stream``: stateful operators
     (bounded dedup state; applyInPandasWithState gap sessionizer).
 
@@ -47,9 +47,10 @@ def windowed_page_counts(pages_stream: DataFrame) -> DataFrame:
     )
 
 
-def streamed_mentions(pages_stream: DataFrame, salt: int = 16) -> DataFrame:
-    """The batch tagger stage applied to a stream — mapInPandas is
-    streaming-compatible; repartition keeps the same plan shape."""
+def streamed_mentions(pages_stream: DataFrame) -> DataFrame:
+    """The batch tagger's fused extract+tag UDF applied to a stream —
+    mapInPandas is streaming-compatible. No repartition: each micro-batch
+    is tagged in the partitioning the file source delivers."""
     from .pipeline import _MENTION_SCHEMA, _tag_pages_batches
 
     return pages_stream.select("url", "html", "lang").mapInPandas(
@@ -157,49 +158,44 @@ def stream_triples(
     alias_pdf,
     out_dir: str,
     checkpoint_dir: str,
-    salt: int = 16,
     retain: int | None = None,
 ):
     """The FULL KG pipeline as a stream: pages file-source → foreachBatch
     running the same batch stages (fused extract+tag → link → canonicalize →
     triples) → parquet partitioned by micro-batch id.
 
-    Exactly-once: the write is keyed by ``batch_id`` with dynamic partition
-    overwrite, so a micro-batch replayed after a crash (the streaming
-    checkpoint re-delivers it) overwrites ITS OWN partition instead of
+    Exactly-once: each micro-batch overwrites its own ``batch_id=N``
+    directory, so a micro-batch replayed after a crash (the streaming
+    checkpoint re-delivers it) replaces ITS OWN partition instead of
     appending duplicates — the parquet output converges to exactly one copy
-    per batch regardless of retries. Dictionary-side state (alias tables +
-    canonical map) is built once and shared across all micro-batches, the
-    streaming analog of run_partitioned's unit-invariant dict state.
+    per batch regardless of retries, even when the replay is empty.
+    Dictionary-side state (alias tables + canonical map) is built once and
+    shared across all micro-batches, the streaming analog of
+    run_partitioned's unit-invariant dict state.
 
     Per-batch lineage (north_rule: every stage checkpoints counters): each
-    committed micro-batch appends a manifest row (stage="stream_triples",
+    micro-batch commits through :func:`~char_ner_spark.lineage.commit_part`,
+    the batch sinks' commit — a manifest row (stage="stream_triples",
     part_id=batch_id, pages in, triples out, order-insensitive checksum)
-    to ``out_dir/_lineage`` — the streaming twin of run_partitioned's
-    per-unit rows. A replayed batch appends a fresh row with the same
-    batch_id; readers take the LAST row per part_id (completed_parts /
-    write_snapshot already resolve by recency), so the manifest history
-    shows the retry while the resolved state converges with the data.
-
-    Snapshots (round-4): every committed micro-batch also commits a
-    ``stream_triples`` snapshot line (``_snapshots/stream_triples/`` —
-    underscore-prefixed because the data lives at the out_dir root and a
-    bare ``metadata/`` sibling would break Spark's partition discovery
-    over ``batch_id=*``), the same
-    machinery the batch sinks use — so a streamed output is readable via
-    ``lineage.read_table(out_dir, "stream_triples")`` with time-travel,
-    ``compact_table`` can rewrite its small files checksum-verified, and
-    ``retain`` bounds snapshot history. A replayed batch REPLACES its own
-    manifest entry (add_part keys by part_id), converging metadata with
-    the data; an empty replay commits rows=0 and readers skip the part.
-    ``n_parts`` is recorded as None — micro-batch ids are an open-ended
-    sequence, not a fixed unit count, so the batch-side resume guard
-    treats the table as wildcard.
+    in ``out_dir/_lineage`` and a ``stream_triples`` snapshot line
+    (``_snapshots/stream_triples/`` — underscore-prefixed because the data
+    lives at the out_dir root and a bare ``metadata/`` sibling would break
+    Spark's partition discovery over ``batch_id=*``). So a streamed output
+    is readable via ``lineage.read_table(out_dir, "stream_triples")`` with
+    time travel, ``compact_table`` can rewrite its small files
+    checksum-verified, and ``retain`` bounds snapshot history. A replayed
+    batch appends a fresh manifest row with the same batch_id (readers
+    take the LAST row per part_id) and REPLACES its snapshot entry
+    (add_part keys by part_id), converging metadata with the data; an
+    empty replay commits rows=0 and readers skip the part. ``n_parts`` is
+    recorded as None — micro-batch ids are an open-ended sequence, not a
+    fixed unit count, so the batch-side resume guard treats the table as
+    wildcard.
 
     Returns the drained-stream StreamingQuery's final triples DataFrame
     (read back from out_dir).
     """
-    from .lineage import append_manifest, table_checksum, write_snapshot
+    from .lineage import commit_part
     from .pipeline import build_dictionary_state, extract_triples, link_pairs, middles_table, tag_pages
 
     dict_state = build_dictionary_state(spark, alias_pdf)
@@ -207,54 +203,11 @@ def stream_triples(
     middles = middles_table(spark)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        import datetime as _dt
-
-        mentions = tag_pages(batch_df, salt=salt)
+        mentions = tag_pages(batch_df)
         linked = link_pairs(mentions, alias_tables, alias_pdf=alias_pdf)
         triples = extract_triples(linked, dict_state["canon"], middles)
-        # dynamic partition overwrite only replaces partitions that RECEIVE
-        # rows — a replayed micro-batch that now yields zero triples would
-        # otherwise leave the stale batch_id partition from the earlier
-        # delivery in place. Drop this batch's partition explicitly first so
-        # the output converges to the replay's content even when empty.
-        import shutil as _shutil
-
-        part_dir = os.path.join(out_dir, f"batch_id={int(batch_id)}")
-        _shutil.rmtree(part_dir, ignore_errors=True)
-        (
-            triples.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-        if os.path.isdir(part_dir):
-            n_out, checksum = table_checksum(spark.read.parquet(part_dir))
-        else:
-            n_out, checksum = 0, "0" * 16  # batch yielded no triples
-        append_manifest(spark, out_dir, {
-            "stage": "stream_triples",
-            "part_id": int(batch_id),
-            "rows_in": batch_df.count(),
-            "rows_out": n_out,
-            "checksum": checksum,
-            "completed_at": _dt.datetime.now(_dt.timezone.utc).replace(
-                tzinfo=None
-            ),
-        })
-        write_snapshot(
-            spark, out_dir, n_parts=None, table="stream_triples",
-            # schema as READ: data cols + the batch_id partition column as
-            # INT — Spark's partition-value inference types batch_id=N dirs
-            # as int, so recording long here would make an all-empty
-            # read_table frame type-flip against a non-empty one
-            schema_json=triples.withColumn(
-                "batch_id", F.lit(int(batch_id)).cast("int")
-            ).schema.json(),
-            add_part={"part_id": int(batch_id), "rows": n_out,
-                      "checksum": checksum},
-            retain=retain,
-        )
+        commit_part(spark, out_dir, "stream_triples", int(batch_id), triples,
+                    rows_in=batch_df.count(), retain=retain)
 
     q = (
         stream_pages(spark, pages_dir)
@@ -264,18 +217,16 @@ def stream_triples(
         .start()
     )
     q.awaitTermination()
-    # a corpus yielding zero triples (or zero micro-batches) writes no
-    # parquet DATA files; read.parquet would then fail schema inference even
-    # though the stream itself succeeded — return a typed empty frame.
-    # Only batch_id=*/ partitions count: Spark's reader skips underscore
-    # dirs (so _lineage never pollutes the data read), and the existence
-    # probe must skip them too or an all-empty stream would try to infer a
-    # schema from a directory holding only manifest rows.
-    import glob as _glob
-    import os as _os
+    # a drain with zero micro-batches writes no parquet files (an empty
+    # micro-batch still writes a schema-only one); read.parquet would then
+    # fail schema inference even though the stream itself succeeded —
+    # return a typed empty frame. Only batch_id=*/ partitions count:
+    # Spark's reader skips underscore dirs (so _lineage never pollutes the
+    # data read), and the existence probe must skip them too.
+    import glob
 
-    if not _glob.glob(_os.path.join(out_dir, "batch_id=*", "**", "*.parquet"),
-                      recursive=True):
+    if not glob.glob(os.path.join(out_dir, "batch_id=*", "**", "*.parquet"),
+                     recursive=True):
         return spark.createDataFrame(
             [],
             # batch_id int: matches Spark's partition-value inference over

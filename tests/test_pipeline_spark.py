@@ -70,18 +70,16 @@ def test_canonical_map_matches_union_find(spark_out, corpus):
     assert got == want
 
 
-def test_distributed_cc_path_matches_union_find(spark, corpus):
+def test_distributed_cc_path_matches_union_find(spark, corpus, monkeypatch):
     """build_dictionary_state takes the union-find shortcut for broadcast-
     sized dictionaries; force the distributed CC path (threshold 0) and
     check it produces the identical canonical map."""
-    from char_ner_spark.pipeline import build_dictionary_state
+    from char_ner_spark import pipeline
 
+    monkeypatch.setattr(pipeline, "CC_DISTRIBUTED_THRESHOLD", 0)
     alias, _ = corpus
     want = union_find_canonical(alias)
-    canon = (
-        build_dictionary_state(spark, alias, cc_distributed_threshold=0)["canon"]
-        .toPandas()
-    )
+    canon = pipeline.build_dictionary_state(spark, alias)["canon"].toPandas()
     got = dict(zip(canon.entity_id, canon.canonical_id))
     assert got == want
 
@@ -92,32 +90,14 @@ def test_edges_graph_shape(spark_out):
     assert (e.weight > 0).all()
 
 
-def test_link_paths_equivalent(spark, corpus):
-    """Broadcast AliasIndex probe == distributed LSH join, surface for surface."""
-    from pyspark.sql import functions as F
-
-    from char_ner_spark.pipeline import (
-        alias_spark_tables, best_links, best_links_broadcast, tag_pages,
-    )
-
-    alias, pages_pdf = corpus
-    pages = spark.createDataFrame(pages_pdf)
-    surfaces = tag_pages(pages).select("surface").distinct()
-    at = alias_spark_tables(spark, alias)
-    lsh = best_links(surfaces, at).toPandas()
-    bcast = best_links_broadcast(spark, surfaces, alias).toPandas()
-    key = lambda df: {
-        r.surface_norm: (r.entity_id, round(r.link_score, 9)) for r in df.itertuples()
-    }
-    assert key(lsh) == key(bcast)
-
-
-def test_link_pairs_broadcast_budget_fallback_identical(spark, corpus):
-    """A dictionary past broadcast_max_rows must fall back to the
+def test_link_pairs_broadcast_budget_fallback_identical(spark, corpus,
+                                                       monkeypatch):
+    """A dictionary past BROADCAST_MAX_ROWS must fall back to the
     distributed LSH path with IDENTICAL links (the path-equality contract,
-    now exercised through link_pairs' own switch)."""
+    exercised through link_pairs' own switch)."""
     import pandas as pd
 
+    from char_ner_spark import pipeline
     from char_ner_spark.pipeline import (
         alias_spark_tables, link_pairs, tag_pages,
     )
@@ -128,9 +108,8 @@ def test_link_pairs_broadcast_budget_fallback_identical(spark, corpus):
     at = alias_spark_tables(spark, alias)
     cols = ["url", "sent_idx", "begin", "surface", "entity_id", "link_score"]
     bcast = link_pairs(mentions, at, alias_pdf=alias).select(*cols).toPandas()
-    dist = link_pairs(
-        mentions, at, alias_pdf=alias, broadcast_max_rows=0
-    ).select(*cols).toPandas()
+    monkeypatch.setattr(pipeline, "BROADCAST_MAX_ROWS", 0)
+    dist = link_pairs(mentions, at, alias_pdf=alias).select(*cols).toPandas()
     key = lambda df: sorted(
         (r.url, r.sent_idx, r.begin, r.surface,
          None if pd.isna(r.entity_id) else int(r.entity_id),
@@ -363,7 +342,7 @@ def test_salted_repartition_defuses_domain_skew(spark):
         dom = "hot.example.org" if i % 10 else f"cold{i}.example.net"
         rows.append((f"https://{dom}/p/{i}", f"text {i}", "de" if i % 10 else "en"))
     pdf = pd.DataFrame(rows, columns=["url", "text", "lang"])
-    df = _salted_repartition(spark.createDataFrame(pdf), salt=16)
+    df = _salted_repartition(spark.createDataFrame(pdf))
     sizes = (
         df.groupBy(F.spark_partition_id().alias("pid")).count().toPandas()["count"]
     )
@@ -759,9 +738,10 @@ def test_compact_raises_on_missing_nonempty_part(spark, corpus):
 def test_pipeline_output_invariant_across_parallelism(spark, corpus, gold):
     """The north rule's implicit determinism contract: the SAME corpus must
     yield the IDENTICAL triple set (values, confidences, counts) whatever
-    the parallelism knobs — salt (pre-tagger repartition width, hence
-    Arrow batch composition) and shuffle partitions. Per-row fp32 ops with
-    no cross-row reductions are what make this hold; this pins it."""
+    the parallelism knob — shuffle partitions (the pre-tagger repartition
+    width, hence Arrow batch composition, and every later exchange).
+    Per-row fp32 ops with no cross-row reductions are what make this hold;
+    this pins it."""
     from char_ner_spark.pipeline import run_pipeline
 
     alias, pages_pdf = corpus
@@ -771,9 +751,9 @@ def test_pipeline_output_invariant_across_parallelism(spark, corpus, gold):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     outs = []
     try:
-        for salt, parts in ((2, "3"), (32, "17")):
+        for parts in ("3", "17"):
             spark.conf.set("spark.sql.shuffle.partitions", parts)
-            t = run_pipeline(spark, pages, alias, salt=salt)["triples"].toPandas()
+            t = run_pipeline(spark, pages, alias)["triples"].toPandas()
             outs.append(sorted(map(tuple, t[key].itertuples(index=False))))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
